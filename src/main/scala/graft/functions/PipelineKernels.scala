@@ -254,7 +254,7 @@ object PipelineKernels {
     * two sub-cell member blocks (ARRAY<STRUCT<vec_id, vo, vn>>) and a
     * CONSERVATIVE threshold tauMinus (tau − 1e-6 < the exact
     * round-to-6 acceptance bound tau − 5e-7), emit one
-    * (id_a, id_b, qv, v, na, nb) struct per ordered pair with
+    * (id_a, id_b, c) struct per ordered pair with
     * id_a < id_b and dot(vo_a, vo_b)/(vn_a·vn_b) >= tauMinus. The dot
     * accumulates left-to-right — the SAME IEEE ops the SQL verify
     * recomputes on the emitted rows — so the screen is a LOSSLESS

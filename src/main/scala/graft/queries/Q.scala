@@ -61,6 +61,12 @@ object Q {
           "extend Q.normTs with the new physical type")
     }
 
+  /** State-store partition count for the stateful streaming entries:
+    * the round-10 A/B result for gate-scale state, re-confirmed by the
+    * round-13 sweep at a 10x state tier (4 won or tied on 7 of 8
+    * entries, BENCH_NOTES). See [[withShufflePartitions]]. */
+  val statePartitions = 4
+
   /** Run `body` with `spark.sql.shuffle.partitions` pinned to `n`,
     * restoring the caller's value after. Stateful streaming queries
     * create one state store per shuffle partition per stateful operator
@@ -70,22 +76,11 @@ object Q {
     * The in-gate streams hold at most a few hundred thousand state
     * rows; 4 partitions strips pure store-commit overhead while leaving
     * real work parallel (A/B at sf0.1: 32 -> 8 -> 4 partitions took the
-    * five stateful entries 29.1 -> 14.3 -> 12.8 s, BENCH_NOTES). A production deployment sizes this from target
-    * state bytes per partition BEFORE first start — state partitioning
-    * is locked into the checkpoint, so it must be picked for the
-    * steady-state load, not the first micro-batch's. */
-  /** State-store partition count for the stateful streaming entries —
-    * the default 4 is the round-10 A/B result for gate-scale state
-    * (see [[withShufflePartitions]]'s scaladoc), parameterized so
-    * larger state tiers can re-derive the right value WITHOUT a code
-    * edit (r13 verdict item 8: A/B at a 10x state tier). A production
-    * deployment sizes this from target state bytes per partition
-    * BEFORE the stream's first start — the partitioning is locked into
-    * the checkpoint. Env, not a Spark conf: it must be fixed before
-    * any session exists, exactly like SPARK_GRAFT_CPUS. */
-  val statePartitions: Int =
-    sys.env.getOrElse("SPARK_GRAFT_STREAM_STATE_PARTITIONS", "4").toInt
-
+    * five stateful entries 29.1 -> 14.3 -> 12.8 s, BENCH_NOTES). A
+    * production deployment sizes this from target state bytes per
+    * partition BEFORE first start — state partitioning is locked into
+    * the checkpoint, so it must be picked for the steady-state load,
+    * not the first micro-batch's. */
   def withShufflePartitions[T](s: SparkSession, n: Int)(body: => T): T = {
     val prev = s.conf.get("spark.sql.shuffle.partitions")
     s.conf.set("spark.sql.shuffle.partitions", n.toString)

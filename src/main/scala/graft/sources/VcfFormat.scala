@@ -159,7 +159,7 @@ object VcfFormat extends GraftFormat {
     val wantGts = split.needs("genotypes") || split.needs("format")
     val region = Regions.matcherFromOptions(options)
     // P.lines handles every split shape: index-chunk streams carry
-    // (0, MaxValue) bounds (pre-bounded by BgzfRangeStream), ranged and
+    // (0, MaxValue) bounds (pre-bounded by Bgzf.openChunk), ranged and
     // BGZF splits apply the line ownership protocol
     P.lines(split, in)
       .map(_._2)

@@ -210,56 +210,69 @@ object Bgzf {
     }
     None
   }
+
+  /** Open an index chunk: the decompressed bytes of [startVoff, endVoff)
+    * only — seek to the start block, skip into it, stop once the
+    * virtual offset reaches endVoff. This is what lets an executor read
+    * ONLY the blocks its index chunk covers — the I/O shape that makes
+    * indexed region queries sublinear at 100 TB. */
+  def openChunk(raw: FSDataStream, startVoff: Long, endVoff: Long): BgzfBlockStream = {
+    val startCoff = startVoff >>> 16
+    raw.seek(startCoff)
+    new BgzfBlockStream(raw.stream, startCoff, () => raw.in.close(),
+      startIntra = (startVoff & 0xffff).toInt, endVoff = endVoff)
+  }
 }
 
 /** Decompressed stream over consecutive BGZF blocks from a block boundary
-  * to file EOF, exposing virtual-offset positions (coff<<16|intra, the
-  * tabix addressing scheme). Bulk reads never cross a block boundary, so
-  * callers can attribute every returned byte to its block — the
-  * bookkeeping that lets split ownership be decided in compressed-file
-  * coordinates. This is the executor-side engine of index-free parallel
-  * scans over bgzipped files (the reference's single-producer Arrow
-  * stream, exon arrow_table_function/module.cpp:36, is the serial design
-  * this replaces). */
+  * to file EOF — or, for an index chunk, from `startIntra` bytes into the
+  * first block up to `endVoff` (exclusive) — exposing virtual-offset
+  * positions (coff<<16|intra, the tabix addressing scheme). Bulk reads
+  * never cross a block boundary, so callers can attribute every returned
+  * byte to its block — the bookkeeping that lets split ownership be
+  * decided in compressed-file coordinates. This is the executor-side
+  * engine of index-free parallel scans and of index-chunk reads over
+  * bgzipped files (the reference's single-producer Arrow stream, exon
+  * arrow_table_function/module.cpp:36, is the serial design this
+  * replaces). */
 final class BgzfBlockStream(in: InputStream, startCoff: Long,
-                            closeUnderlying: () => Unit) extends InputStream {
+                            closeUnderlying: () => Unit,
+                            startIntra: Int = 0,
+                            endVoff: Long = Long.MaxValue) extends InputStream {
   private var blockCoff: Long = startCoff
   private var nextCoff: Long = startCoff
   private var block: Array[Byte] = _
+  /** readable bytes of `block`: all of it, except in endVoff's block */
+  private var limit = 0
   private var pos = 0
   private var eof = false
   /** voff of the last byte returned; -1 before the first read. */
   var lastByteVoff: Long = -1L
 
   // `in` must already be positioned at the block boundary `startCoff`
-  // (Bgzf.openSynced arranges this without a second source read)
+  // (Bgzf.openSynced / Bgzf.openChunk arrange this)
   loadBlock()
+  if (!eof) pos = math.min(startIntra, limit)
 
   private def loadBlock(): Unit = {
     blockCoff = nextCoff
+    if ((blockCoff << 16) >= endVoff) { eof = true; block = null; return }
     Bgzf.readBlock(in) match {
       case null => eof = true; block = null
       case (clen, data) =>
         nextCoff = blockCoff + clen
         block = data
+        limit =
+          if (blockCoff == endVoff >>> 16) math.min(data.length, (endVoff & 0xffff).toInt)
+          else data.length
         pos = 0
-        if (data.length == 0) loadBlock() // skip EOF-marker/empty blocks
+        if (limit == 0) loadBlock() // skip EOF-marker/empty blocks
     }
   }
 
-  /** voff of the byte the next read returns; Long.MaxValue at EOF.
-    * CAUTION: at a block boundary this reports the offset of the next
-    * RAW block, which may be an empty/EOF-marker block that read() will
-    * skip — for exact attribution derive positions from `lastByteVoff`
-    * after reading instead (VoffLineReader.fill, BgzfWindow.ensure). */
-  def nextVoff: Long =
-    if (eof) Long.MaxValue
-    else if (pos >= block.length) nextCoff << 16
-    else (blockCoff << 16) | pos.toLong
-
   override def read(): Int = {
     if (eof) return -1
-    if (pos >= block.length) { loadBlock(); if (eof) return -1 }
+    if (pos >= limit) { loadBlock(); if (eof) return -1 }
     val b = block(pos) & 0xff
     lastByteVoff = (blockCoff << 16) | pos.toLong
     pos += 1
@@ -269,8 +282,8 @@ final class BgzfBlockStream(in: InputStream, startCoff: Long,
   override def read(b: Array[Byte], off: Int, len: Int): Int = {
     if (len == 0) return 0 // InputStream contract; must not touch state
     if (eof) return -1
-    if (pos >= block.length) { loadBlock(); if (eof) return -1 }
-    val n = math.min(len, block.length - pos)
+    if (pos >= limit) { loadBlock(); if (eof) return -1 }
+    val n = math.min(len, limit - pos)
     System.arraycopy(block, pos, b, off, n)
     pos += n
     lastByteVoff = (blockCoff << 16) | (pos - 1).toLong
@@ -477,74 +490,6 @@ object BgzfRecordSplit {
       }
     }
   }
-}
-
-/** An InputStream over the BGZF-decompressed bytes of [startVoff,
-  * endVoff): seeks the raw stream to the start block, skips into it, and
-  * reports EOF once the virtual offset passes endVoff. This is what lets
-  * an executor read ONLY the blocks its index chunk covers — the I/O
-  * shape that makes indexed region queries sublinear at 100 TB.
-  */
-final class BgzfRangeStream(raw: FSDataStream, startVoff: Long, endVoff: Long)
-    extends InputStream {
-
-  private var blockCoff: Long = startVoff >>> 16
-  private var block: Array[Byte] = _
-  private var pos: Int = 0
-  private var nextCoff: Long = blockCoff
-  private var eof = false
-
-  { // position + first block + intra-block skip
-    raw.seek(blockCoff)
-    loadBlock()
-    pos = (startVoff & 0xffff).toInt
-    if (block != null && pos > block.length) pos = block.length
-  }
-
-  private def loadBlock(): Unit = {
-    blockCoff = nextCoff
-    if (blockCoff >= (endVoff >>> 16) && (endVoff & 0xffff) == 0) { eof = true; block = null; return }
-    Bgzf.readBlock(raw.stream) match {
-      case null => eof = true; block = null
-      case (clen, data) =>
-        nextCoff = blockCoff + clen
-        block = data
-        pos = 0
-        if (data.length == 0) loadBlock() // EOF marker block
-    }
-  }
-
-  private def currentVoff: Long = (blockCoff << 16) | pos.toLong
-
-  override def read(): Int = {
-    if (eof || currentVoff >= endVoff) return -1
-    if (block == null || pos >= block.length) {
-      loadBlock()
-      if (eof || block == null) return -1
-      if (currentVoff >= endVoff) return -1
-    }
-    val b = block(pos) & 0xff
-    pos += 1
-    b
-  }
-
-  override def read(b: Array[Byte], off: Int, len: Int): Int = {
-    if (eof || currentVoff >= endVoff) return -1
-    if (block == null || pos >= block.length) {
-      loadBlock()
-      if (eof || block == null) return -1
-    }
-    val limit =
-      if ((endVoff >>> 16) == blockCoff) math.min(block.length, (endVoff & 0xffff).toInt)
-      else block.length
-    if (pos >= limit) return -1
-    val n = math.min(len, limit - pos)
-    System.arraycopy(block, pos, b, off, n)
-    pos += n
-    n
-  }
-
-  override def close(): Unit = raw.in.close()
 }
 
 /** BGZF writer: payload chunked into <=64 KiB blocks, each a gzip member

@@ -89,6 +89,18 @@ class LabelMarginKernelSpec extends AnyFunSuite {
     }
   }
 
+  test("a DECIMAL(18,0) bb field fails analysis instead of being misread") {
+    // the kernel reads bb as getDecimal(2, 38, 0); a narrower decimal
+    // is stored in a different physical form, so the binder must refuse it
+    graft.functions.GraftFunctions.registerAll(spark)
+    val e = intercept[org.apache.spark.sql.AnalysisException] {
+      spark.sql("""SELECT graft_label_margin_scores(array(5L, 6L),
+          array(named_struct('clabel', 1, 'slv', array(1L, 2L),
+                             'bb', CAST(5 AS DECIMAL(18,0)))))""").collect()
+    }
+    assert(e.getMessage.contains("label_margin_scores requires"), e.getMessage)
+  }
+
   test("null semantics replay the HOF chain") {
     // length mismatch (zip_with null padding) nulls that centroid's m
     val df = frame(Seq(

@@ -105,4 +105,62 @@ class TabixSpec extends AnyFunSuite {
     val fallback = partitions(GraftIO.vcf_query(spark, "src/test/resources/fixtures/vcf/test.vcf.gz", "1"))
     assert(fallback.forall(!_.bgzfChunk))
   }
+
+  test("BGZF range reads return exactly the inflated bytes of [startVoff, endVoff)") {
+    import graft.sources.core.{Bgzf, BgzfOutputStream, GraftFiles}
+    // two concatenated BGZF streams of 3000-byte blocks: the first
+    // stream's empty EOF-marker block sits in the middle of the file
+    def bgzf(payload: Array[Byte]): Array[Byte] = {
+      val bytes = new java.io.ByteArrayOutputStream()
+      val out = new BgzfOutputStream(bytes)
+      payload.grouped(3000).foreach { c => out.write(c); out.flush() }
+      out.close()
+      bytes.toByteArray
+    }
+    val rnd = new scala.util.Random(7)
+    val payload = Array.fill(20000)("ACGT\n".charAt(rnd.nextInt(5)).toByte)
+    val file = bgzf(payload.take(12000)) ++ bgzf(payload.drop(12000))
+    val inflated = Bgzf.inflateAll(file)
+    assert(inflated.sameElements(payload))
+    // (compressed offset, uncompressed offset, inflated length) per block
+    val blocks = {
+      val in = new java.io.ByteArrayInputStream(file)
+      val out = scala.collection.mutable.ArrayBuffer.empty[(Long, Long, Int)]
+      var c = 0L
+      var u = 0L
+      var b = Bgzf.readBlock(in)
+      while (b != null) {
+        out += ((c, u, b._2.length))
+        c += b._1
+        u += b._2.length
+        b = Bgzf.readBlock(in)
+      }
+      out.toIndexedSeq
+    }
+    assert(blocks.map(_._3) == Seq(3000, 3000, 3000, 3000, 0, 3000, 3000, 2000, 0))
+    val p = java.nio.file.Files.createTempFile("graft-range", ".vcf.gz")
+    p.toFile.deleteOnExit()
+    java.nio.file.Files.write(p, file)
+
+    def voff(block: Int, intra: Int): Long = (blocks(block)._1 << 16) | intra.toLong
+    def uoff(block: Int, intra: Int): Int = (blocks(block)._2 + intra).toInt
+    val ranges = Seq(
+      ((0, 1234), (1, 2000)), // start in the middle of a block
+      ((1, 0), (3, 0)),       // end at a block boundary (intra offset 0)
+      ((2, 10), (2, 2999)),   // end in the middle of a block
+      ((2, 500), (6, 100)),   // crosses the empty block
+      ((3, 2500), (5, 0)))    // ends at the block after the empty one
+    for (((sb, si), (eb, ei)) <- ranges) {
+      val raw = GraftFiles.open(p.toString, new org.apache.hadoop.conf.Configuration())
+      val in = Bgzf.openChunk(raw, voff(sb, si), voff(eb, ei))
+      val got = try {
+        // one single-byte read, then bulk reads
+        val first = in.read()
+        Array(first.toByte) ++ in.readAllBytes()
+      } finally in.close()
+      val want = inflated.slice(uoff(sb, si), uoff(eb, ei))
+      assert(got.sameElements(want),
+        s"[($sb,$si), ($eb,$ei)): ${got.length} bytes, wanted ${want.length}")
+    }
+  }
 }

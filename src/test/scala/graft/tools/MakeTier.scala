@@ -6,9 +6,9 @@ import org.apache.spark.sql.functions._
 /** Stage a K×-replicated copy of a driver sf tier (manual:
   * sbt "Test/runMain graft.tools.MakeTier [srcDir] [outDir] [K]") so the
   * FULL registry can be benched one tier above the largest driver tier
-  * (sf0.1 × 10 ≈ sf1) — the round-8 verdict's ask #4: ScaleProbe curves
-  * cover 13 heavy entries on synthetic tables, this gives the
-  * whole-suite number on the real star schema.
+  * (sf0.1 × 10 ≈ sf1) on the real star schema: run graft.Bench with
+  * SPARK_GRAFT_SF_DIR at the output (and SPARK_GRAFT_BENCH_ONLY to pick
+  * entries) for per-entry tier timings.
   *
   * Replication is key-shifted so the schema stays join-consistent:
   * each copy c adds c × (max key + 1) to every primary AND referencing

@@ -9,10 +9,8 @@ import org.apache.spark.sql.SparkSession
 import graft.sources.VcfFormat
 import graft.sources.core.GraftSplit
 
-/** Where does fmt_vcf_scan wall actually go (round-11 verdict ask #8)?
-  * The round-10 nested-columnar step measured ~parse-bound (0.96×
-  * columnar vs rows), so before building more columnar surface this
-  * probe splits the scan into its layers on one generated ~VCF:
+/** Where does fmt_vcf_scan wall actually go? This probe splits the
+  * scan into its layers on one generated ~VCF:
   *
   *   A. raw IO floor    — BufferedReader line iteration, count chars
   *   B. parse floor     — VcfFormat.read() drained single-thread
@@ -20,11 +18,10 @@ import graft.sources.core.GraftSplit
   *   C. pruned parse    — same with neededCols={chrom,pos} (runtime
   *                        pruning skips info/genotype materialization)
   *   D. Spark row scan  — full fmt-vcf read through the DSv2 source
-  *   E. Spark columnar  — same with columnar=true
   *
   * B−A is parse CPU; B−C is the share the expensive columns cost;
-  * D vs B/threads is framework + row-conversion overhead. Numbers and
-  * the build/don't-build decision go to BENCH_NOTES.md.
+  * D vs B/threads is framework + row-conversion overhead. Numbers go
+  * to BENCH_NOTES.md.
   *
   *   sbt "Test/runMain graft.tools.VcfParseProbe 800000"
   */
@@ -40,9 +37,8 @@ object VcfParseProbe {
       .getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
 
-    // same record shape as ColumnarSpike's nested case: alt array +
-    // header-typed info (flag, scalar int, Number=A float array) +
-    // genotypes so the sample columns exist
+    // alt array + header-typed info (flag, scalar int, Number=A float
+    // array) + genotypes so the sample columns exist
     val dir = Files.createTempDirectory("graft-vcfprobe")
     val vp = dir.resolve("big.vcf")
     val vout = new java.io.BufferedOutputStream(Files.newOutputStream(vp), 1 << 20)
@@ -100,19 +96,16 @@ object VcfParseProbe {
     val bParse = (1 to 3).map(_ => timed("B full parse (single thread)")(drain(None))).min
     val cPruned = (1 to 3).map(_ => timed("C pruned parse {chrom,pos}")(
       drain(Some(Set("chrom", "pos"))))).min
-    def sparkScan(columnar: Boolean): Double = {
-      val o = opts ++ (if (columnar) Map("columnar" -> "true") else Map.empty) +
-        ("maxsplitbytes" -> (16L << 20).toString)
+    def sparkScan(): Double = {
+      val o = opts + ("maxsplitbytes" -> (16L << 20).toString)
       val df = graft.sources.GraftIO.read_vcf_file_records(spark, vp.toString, o)
       val t0 = System.nanoTime()
       df.selectExpr("count(*)", "sum(info.dp)", "sum(size(alt))").collect()
       (System.nanoTime() - t0) / 1e9
     }
-    sparkScan(columnar = false) // warm
-    val dRow = (1 to 3).map(_ => sparkScan(columnar = false)).min
-    val eCol = (1 to 3).map(_ => sparkScan(columnar = true)).min
+    sparkScan() // warm
+    val dRow = (1 to 3).map(_ => sparkScan()).min
     println(f"[vcfprobe] D spark rows ($cpus threads)      $dRow%7.2f s")
-    println(f"[vcfprobe] E spark columnar                $eCol%7.2f s")
     println(f"[vcfprobe] parse CPU = ${bParse - aio}%.2f s of $bParse%.2f s single-thread; " +
       f"expensive-col share = ${bParse - cPruned}%.2f s; " +
       f"framework+conversion ≈ D − B/threads = ${dRow - bParse / cpus.toInt}%.2f s")
